@@ -148,6 +148,12 @@ def connected_components(
     every round's plan O(1); this is the same move GraphX/GraphFrames
     make for iterative algorithms. Checkpoint blocks are freed by the
     ContextCleaner when the superseded frames are garbage-collected.
+
+    ``max_iter`` is a strict budget of propagation steps, not of driver
+    convergence checks: at most ``max_iter`` label rounds run (two per
+    check, one final single round when ``max_iter`` is odd). A graph that
+    has not converged within the budget returns its labels as they stand,
+    so a component may still carry more than one label.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = _truncate(
@@ -246,7 +252,11 @@ def dedup_clusters(
 ) -> DataFrame:
     """Near-duplicate clusters from a similarity-pair list: (doc, cluster)
     where cluster = min doc id in the connected component — the keep-one-
-    per-cluster endgame of every pairwise dedup operator in dedup.py."""
+    per-cluster endgame of every pairwise dedup operator in dedup.py.
+
+    ``max_iter`` is :func:`connected_components`' strict step budget: a
+    cluster whose pair graph needs more rounds than the budget comes back
+    split across several cluster ids."""
     return connected_components(
         pairs, src=src, dst=dst, max_iter=max_iter, checkpoint_dir=checkpoint_dir
     ).select(

@@ -1,26 +1,33 @@
-"""Distributed STIX bundle ingest.
+"""STIX bundle ingest: the one write path into the warehouse.
 
-The storage's ``cache()`` parses small bundles driver-side (reference
-parity: firepit/sqlstorage.py:410-444 is inherently driver-side too). This
-module is the 100 TB path: bundle files are read by executors, each
-observation is flattened *where it is read* via ``mapInPandas`` (the same
-pure-Python flatten kernel), and per-type schemas are captured **in the
-same pass** — each flatten partition emits per-type "kind fragments"
-(column -> {bool,int,float,list,str}) alongside the records, the driver
-merges the fragments with the exact type lattice the driver-side ingest
-uses (storage._infer_field), and each type is parsed with one JVM-side
-``from_json`` scan against that explicit schema.  No ``spark.read.json``
-schema inference anywhere, so ingest is one flatten pass + one bounded
-parse pass per type instead of ~2 full scans per type, and both ingest
-paths now agree on column types byte-for-byte (dicts -> sort_keys JSON
-text, mixed numerics -> double, lists -> array<string>).
+Every write lands through :func:`ingest_flat`, which takes a frame of
+``(otype, record)`` rows — ``record`` a flattened object as canonical JSON
+text — and parses each type with one JVM-side ``from_json`` against an
+explicit schema built from the values' kinds (:func:`_type_schema`, the
+one schema lattice). Two producers feed it:
 
-Pipeline shape (all distributed):
-  read bundles -> explode objects -> mapInPandas(flatten + kind capture) ->
-  (type, json) rows -> per-type from_json(explicit schema) -> upsert merge
+- :func:`cache_distributed` (the 100 TB path): bundle files are read by
+  executors, each observation is flattened *where it is read* via
+  ``mapInPandas``, and each flatten partition emits per-type "kind
+  fragments" (column -> {bool,int,float,list,str}) alongside the records;
+  the driver merges them after one collect over the persisted frame.
+- :func:`ingest_records` (``SparkStorage.cache``/``load``/``upsert_many``/
+  ``reassign``): records already flattened driver-side go through the same
+  canonicalize-and-kind kernel and become the frame via one Arrow
+  ``createDataFrame``; their kinds are known already, so ``ingest_flat``
+  skips the persist and the fragment collect.
+
+Both paths therefore store identical bytes: dicts -> sort_keys JSON text,
+mixed numerics -> double, lists -> array<string>, mixed kinds -> the JSON
+rendering of each value (``true``, ``1.5``). No ``spark.read.json`` schema
+inference anywhere.
+
+Pipeline shape:
+  records -> (type, json) rows -> per-type from_json(explicit schema) ->
+  upsert merge; plus one ``__queries`` tag batch per call
 
 Shuffle analysis: the only wide operations are the per-type upsert
-groupBy(id) and the final merge join — both keyed on the deterministic SCO
+groupBy(id) and the tag distinct — both keyed on the deterministic SCO
 id, which is uniformly distributed (uuid5), so no skew. Flattening is
 map-only; fragment collection moves only (types x columns) metadata to the
 driver, never object data.
@@ -29,9 +36,11 @@ driver, never object data.
 from __future__ import annotations
 
 import json
+from concurrent.futures import ThreadPoolExecutor
 from typing import Iterator
 
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -43,7 +52,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from firepit_spark.flatten import flatten
+from firepit_spark.flatten import CONTAINS, REFLIST, flatten
 
 _FLAT_SCHEMA = StructType(
     [StructField("otype", StringType()), StructField("record", StringType())]
@@ -55,7 +64,7 @@ SCHEMA_MARKER = "\x00schema"
 
 
 def _kind(v) -> str:
-    """Python-value kind tag; mirrors storage._infer_field's lattice input."""
+    """Kind tag of one canonical value: the input of ``_type_schema``."""
     if isinstance(v, bool):  # bool before int: bool is an int subclass
         return "bool"
     if isinstance(v, int):
@@ -68,10 +77,10 @@ def _kind(v) -> str:
 
 
 def _canonicalize(rec: dict) -> dict:
-    """Pre-serialize the values the driver path coerces (storage._coerce):
-    dicts -> sort_keys JSON text, list elements -> strings.  Doing it in the
-    kernel keeps the downstream ``from_json`` parse lossless and makes both
-    ingest paths produce identical bytes."""
+    """Pre-serialize the values a column type cannot hold as-is: dicts ->
+    sort_keys JSON text, list elements -> strings. Runs on every record of
+    both producers, so the downstream ``from_json`` parse is lossless and
+    identical wherever the record was flattened."""
     out = {}
     for k, v in rec.items():
         if isinstance(v, dict):
@@ -84,6 +93,24 @@ def _canonicalize(rec: dict) -> dict:
         else:
             out[k] = v
     return out
+
+
+def _encode(records, out_t: list, out_r: list, kinds: dict):
+    """Append each flat record's ``(otype, canonical json)`` row to
+    ``out_t``/``out_r`` and fold its column kinds into ``kinds``
+    ({otype: {col: set(kinds)}}). The kernel of both producers."""
+    for rec in records:
+        canon = _canonicalize(rec)
+        t = canon["type"]
+        kmap = kinds.setdefault(t, {})
+        for k, v in canon.items():
+            if k == "type":
+                continue
+            s = kmap.setdefault(k, set())
+            if v is not None:
+                s.add(_kind(v))
+        out_t.append(t)
+        out_r.append(json.dumps(canon, default=str))
 
 
 def read_bundle_objects(spark: SparkSession, paths) -> DataFrame:
@@ -106,9 +133,9 @@ def flatten_objects(objects_df: DataFrame) -> DataFrame:
     ``SCHEMA_MARKER`` row per (partition-batch, type) carrying the observed
     column kinds.
 
-    Arrow-batched: each worker flattens its partition's observations with
-    the identical kernel the driver-side path uses, so both ingest paths
-    produce byte-identical records.
+    Arrow-batched: each worker flattens its partition's observations and
+    encodes them with the same kernel as :func:`ingest_records`, so both
+    producers emit byte-identical records.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -116,19 +143,7 @@ def flatten_objects(objects_df: DataFrame) -> DataFrame:
             out_t, out_r = [], []
             kinds: dict[str, dict[str, set]] = {}
             for raw in pdf["value"]:
-                obj = json.loads(raw)
-                for rec in flatten(obj):
-                    canon = _canonicalize(rec)
-                    t = canon["type"]
-                    kmap = kinds.setdefault(t, {})
-                    for k, v in canon.items():
-                        if k == "type":
-                            continue
-                        s = kmap.setdefault(k, set())
-                        if v is not None:
-                            s.add(_kind(v))
-                    out_t.append(t)
-                    out_r.append(json.dumps(canon, default=str))
+                _encode(flatten(json.loads(raw)), out_t, out_r, kinds)
             for t, cols in kinds.items():
                 out_t.append(SCHEMA_MARKER)
                 out_r.append(
@@ -153,9 +168,12 @@ def _merge_fragments(frag_rows) -> dict:
 
 
 def _type_schema(cols: dict) -> StructType:
-    """Kind sets -> Spark schema; the same lattice as storage._infer_field
-    (timestamp props stay strings here — ingest_dataframe converts them,
-    exactly as it did for the inferred-schema path)."""
+    """Kind sets -> Spark schema: the warehouse's one type lattice.
+
+    bool -> boolean, int -> bigint, int+float -> double, list ->
+    array<string>, anything else (text, mixed kinds, all-null) -> string.
+    Timestamp props stay strings here; ``ingest_dataframe`` converts them
+    to TimestampType."""
     fields = []
     for c in sorted(cols):
         ks = cols[c]
@@ -179,47 +197,77 @@ def _type_schema(cols: dict) -> StructType:
 def ingest_flat(
     storage,
     flat: DataFrame,
-    query_id: str,
+    query_id: str | None,
     max_concurrent_types: int = 8,
+    kinds: dict | None = None,
 ):
-    """Merge a ``flatten_objects`` output frame into the warehouse.
+    """Merge a frame of ``(otype, record)`` rows into the warehouse.
 
-    Shared by batch (:func:`cache_distributed`) and streaming
-    (streaming/ingest.py) — one fragment-collect over the persisted flat
-    frame, then one ``from_json`` parse scan per type.  Per-type parse/
-    merge/write jobs are independent Spark jobs, so they run concurrently
-    from a small driver thread pool — type count (~10) rather than data
-    size bounds the win, and the batch-partition write path needs no
-    cross-type coordination.
+    ``kinds`` ({otype: {col: set(kinds)}}) is the merged schema input when
+    the caller already holds it (:func:`ingest_records`); without it the
+    frame is persisted and its ``SCHEMA_MARKER`` fragments are collected
+    (:func:`flatten_objects` output, batch and streaming). Then one
+    ``from_json`` parse per type, and — unless ``query_id`` is None — ONE
+    ``__queries`` batch tagging every non-edge record id with
+    ``query_id``. The per-type parse/merge/write jobs and the tag write
+    are independent Spark jobs, so they run concurrently from a small
+    driver thread pool whose workers inherit the caller's job group.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    flat = flat.persist()
+    persisted = kinds is None
+    if persisted:
+        flat = flat.persist()
     try:
-        frags = [
-            r[0]
-            for r in flat.filter(F.col("otype") == SCHEMA_MARKER)
-            .select("record")
-            .collect()
-        ]
-        merged = _merge_fragments(frags)
+        if persisted:
+            kinds = _merge_fragments(
+                r[0]
+                for r in flat.filter(F.col("otype") == SCHEMA_MARKER)
+                .select("record")
+                .collect()
+            )
 
         def ingest_one(otype: str):
-            cols = merged[otype]
-            if not cols:
-                return
-            schema = _type_schema(cols)
+            schema = _type_schema(kinds[otype])
             type_df = (
                 flat.filter(F.col("otype") == otype)
                 .select(F.from_json("record", schema).alias("r"))
                 .select("r.*")
             )
-            storage.ingest_dataframe(otype, type_df, str(query_id))
+            storage.ingest_dataframe(otype, type_df)
 
+        def tag():
+            from firepit_spark.storage import QUERIES
+
+            sco_id = F.get_json_object("record", "$.id")
+            tags = flat.filter(
+                ~F.col("otype").isin(CONTAINS, REFLIST, SCHEMA_MARKER)
+                & sco_id.isNotNull()
+            ).select(sco_id.alias("sco_id"), F.lit(str(query_id)).alias("query_id"))
+            storage.ingest_dataframe(QUERIES, tags)
+
+        jobs = [lambda t=t: ingest_one(t) for t in sorted(kinds) if kinds[t]]
+        if query_id is not None:
+            jobs.append(tag)
+        run = inheritable_thread_target(storage.spark)(lambda job: job())
         with ThreadPoolExecutor(max_workers=max_concurrent_types) as pool:
-            list(pool.map(ingest_one, sorted(merged)))
+            list(pool.map(run, jobs))
     finally:
-        flat.unpersist()
+        if persisted:
+            flat.unpersist()
+
+
+def ingest_records(storage, records, query_id: str | None):
+    """Merge already-flattened records (dicts with a ``type`` key) into the
+    warehouse — the driver-side producer of :func:`ingest_flat`. The
+    records are encoded by the flatten kernel and shipped as one Arrow
+    ``createDataFrame``; untagged when ``query_id`` is None."""
+    out_t, out_r, kinds = [], [], {}
+    _encode(records, out_t, out_r, kinds)
+    if not out_t:
+        return
+    flat = storage.spark.createDataFrame(
+        pd.DataFrame({"otype": out_t, "record": out_r}), schema=_FLAT_SCHEMA
+    )
+    ingest_flat(storage, flat, query_id, kinds=kinds)
 
 
 def cache_distributed(

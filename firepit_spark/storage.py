@@ -12,8 +12,13 @@ copy-on-write rename, firepit/sqlitestorage.py:199-211).
 Upsert-on-id merge semantics (firepit/sqlstorage.py:367-404):
 ``first_observed`` MIN, ``last_observed`` MAX, ``number_observed`` SUM,
 everything else COALESCE(new, old); ``observed-data`` conflicts keep the
-first row (DO NOTHING parity). Implemented as a full-outer merge per
-ingest batch — the Delta-MERGE shape, runnable on plain Parquet.
+first row (DO NOTHING parity). Each ingest lands as its own batch
+partition and the merge applies at read (see ``_merge_batches``).
+
+Ingest has one path: ``cache``, ``load``, ``upsert_many``/``upsert`` and
+``reassign`` hand flattened records to ``sources.bundles.ingest_records``,
+and ``cache_distributed`` feeds the same ``ingest_flat`` from executors;
+every type frame then arrives here through ``ingest_dataframe``.
 """
 
 from __future__ import annotations
@@ -24,22 +29,10 @@ import re
 import shutil
 import threading
 import uuid
-from collections import defaultdict
 from dataclasses import dataclass, field
-from datetime import datetime
 from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from firepit_spark import flatten as raftmod
 from firepit_spark.deref import DerefPlanner, unresolve
@@ -55,7 +48,8 @@ from firepit_spark.patterns import compile_pattern, pattern_time_range
 from firepit_spark import props
 from firepit_spark.props import auto_aggs, primary_prop
 from firepit_spark.query import Aggregation, BinnedColumn, Query
-from firepit_spark.timestamp import TIMESTAMP_PROPS, to_datetime
+from firepit_spark.sources.bundles import ingest_records
+from firepit_spark.timestamp import TIMESTAMP_PROPS
 from firepit_spark.validate import validate_name, validate_path
 
 CONTAINS = "__contains"
@@ -111,10 +105,10 @@ class SparkStorage:
         self._deref = DerefPlanner(self)
         # fold batch partitions back into one past this many (see compact())
         self.auto_compact_batches = 32
-        # one lock per table: concurrent ingest threads (cache_distributed
-        # and _write_objects run per-type jobs in parallel) contend only on
-        # shared tables like __queries, where the next-batch-number probe
-        # must be atomic. Lock CREATION itself goes through _write_lock():
+        # one lock per table: ingest (sources/bundles.ingest_flat) runs its
+        # per-type writes from a thread pool, and concurrent callers contend
+        # only on shared tables like __queries, where the next-batch-number
+        # probe must be atomic. Lock CREATION itself goes through _write_lock():
         # a bare defaultdict __getitem__ can hand two racing threads two
         # different Lock objects for the same brand-new key.
         self._write_locks: dict[str, threading.Lock] = {}
@@ -445,14 +439,17 @@ class SparkStorage:
 
     def cache(self, query_id: str, bundles, batchsize: int = 2000, **kwargs):
         """Ingest STIX bundle(s) tagged with ``query_id``
-        (parity: firepit/sqlstorage.py:410-444)."""
+        (parity: firepit/sqlstorage.py:410-444). Observations are flattened
+        driver-side and land through ``sources.bundles.ingest_records``:
+        one Arrow frame, one ``from_json`` per type, one ``__queries``
+        batch per call."""
         if not isinstance(bundles, list):
             bundles = [bundles]
         objects = []
         for bundle in bundles:
             for obj in raftmod.get_objects(bundle):
                 objects.extend(raftmod.flatten(obj))
-        self._write_objects(objects, str(query_id))
+        ingest_records(self, objects, str(query_id))
 
     def load(
         self,
@@ -487,7 +484,7 @@ class SparkStorage:
             if "id" not in obj or not preserve_ids:
                 obj["id"] = makeid(obj)
             prepared.append(raftmod.normalize_obj(obj))
-        self._write_objects(prepared, str(query_id))
+        ingest_records(self, prepared, str(query_id))
         self.extract(viewname, sco_type, query_id, "")
         return sco_type
 
@@ -521,14 +518,14 @@ class SparkStorage:
                 obj = dict(obj)
             obj.setdefault("type", tablename)
             prepared.append(obj)
-        self._write_objects(
-            prepared, str(query_id) if query_id is not None else None
+        ingest_records(
+            self, prepared, str(query_id) if query_id is not None else None
         )
 
     def upsert(self, cursor, tablename, obj, query_id, schema=None):
         """Single-object :meth:`upsert_many` (reference shim,
         firepit/sqlstorage.py:382-404). Batch callers should pass the
-        whole list to ``upsert_many`` — one Spark job per call."""
+        whole list to ``upsert_many`` — one ingest per call."""
         self.upsert_many(cursor, tablename, [obj], query_id, schema)
 
     def path_joins(self, viewname, sco_type, column):
@@ -556,13 +553,14 @@ class SparkStorage:
             for obj in split:
                 if "type" not in obj:
                     raise InvalidObject("missing `type`")
-            self._write_objects(split, None)
+            ingest_records(self, split, None)
             # view definition itself is unchanged; clear caches so dependents
             # see the merged rows
         else:
-            # aggregate-shaped data: snapshot as a standalone table
-            recs = [dict(o) for o in objects]
-            self._write_type_batch(viewname, recs, None)
+            # aggregate-shaped data: snapshot as a standalone table (a
+            # ``type`` column never reaches a table, so it can carry the
+            # target table name)
+            ingest_records(self, [{**o, "type": viewname} for o in objects], None)
             self._views.pop(viewname, None)
             if viewname in self._meta:
                 # drop any persisted recipe/snapshot: the table IS the data now
@@ -585,14 +583,16 @@ class SparkStorage:
 
     def ingest_dataframe(self, otype: str, df: DataFrame, query_id: str | None = None):
         """Merge an already-flattened per-type DataFrame into the warehouse —
-        the distributed-ingest entry point (see sources/bundles.py). Applies
-        the same schema normalization as the driver-side path: known
-        timestamp props become TimestampType, struct columns (un-recursed
-        custom SCO dicts) become JSON text, and narrow numerics widen to
-        long/double — the driver path writes python ints/floats as
-        BIGINT/DOUBLE, and parquet schema merge across batches refuses
-        INT-vs-BIGINT, so an engine-built frame (e.g. a log conversion
-        using int literals) must land with the wide types."""
+        every ingest ends here (see sources/bundles.ingest_flat), and
+        engine-built frames (log conversions, ``enrich``) enter here
+        directly. Normalizes the schema: known timestamp props become
+        TimestampType, struct columns (un-recursed custom SCO dicts) become
+        JSON text, and narrow numerics widen to long/double — bundle ingest
+        writes integers/floats as BIGINT/DOUBLE, and parquet schema merge
+        across batches refuses INT-vs-BIGINT, so an engine-built frame (e.g.
+        a log conversion using int literals) must land with the wide types.
+        With ``query_id`` the frame's ids are tagged in ``__queries``;
+        ``otype`` ``__queries`` itself takes ``(sco_id, query_id)`` rows."""
         from pyspark.sql.types import (
             ByteType as _Byte,
             FloatType as _Float,
@@ -620,6 +620,8 @@ class SparkStorage:
             self._merge_edges(otype, df, ["source_ref", "target_ref"])
         elif otype == REFLIST:
             self._merge_edges(otype, df, ["ref_name", "source_ref", "target_ref"])
+        elif otype == QUERIES:
+            self._merge_edges(otype, df, ["sco_id", "query_id"])
         elif "id" in df.columns:
             df = self._merge_batch_dups(otype, df)
             self._merge_upsert(otype, df)
@@ -631,129 +633,7 @@ class SparkStorage:
         else:
             self._append(otype, df)
 
-    def _write_objects(self, objects: list, query_id: str | None):
-        by_type = defaultdict(list)
-        for obj in objects:
-            rec = {shorten_extension_name(k): v for k, v in obj.items()}
-            by_type[rec["type"]].append(rec)
-        # Per-type batches land in DIFFERENT tables, so their write jobs
-        # are independent — submit them from a small thread pool so one
-        # type's write-job tail backfills with the next type's work
-        # (Spark schedules concurrent jobs FIFO; the driver threads spend
-        # their time blocked on py4j socket reads, so the GIL is not a
-        # bottleneck). Result-determinism is unaffected: each type table
-        # sees exactly one batch per call, and the only tables touched by
-        # MULTIPLE types in one call (__queries tags, edge tables) merge
-        # across batches order-independently (distinct / groupBy-max) and
-        # serialize their batch-number assignment under the per-table
-        # write lock. Measured 3.2x on a 6-type bundle ingest.
-        items = list(by_type.items())
-        if len(items) <= 1:
-            for otype, recs in items:
-                self._write_type_batch(otype, recs, query_id)
-            return
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(4, len(items))) as pool:
-            futs = [
-                pool.submit(self._write_type_batch, otype, recs, query_id)
-                for otype, recs in items
-            ]
-            for f in futs:
-                f.result()
-
-    # -- schema inference / record coercion ---------------------------------
-
-    @staticmethod
-    def _infer_field(key: str, values: list) -> StructField:
-        base = key.rsplit(".", 1)[-1].rsplit(":", 1)[-1].strip("'")
-        if base in TIMESTAMP_PROPS:
-            return StructField(key, TimestampType())
-        kinds = set()
-        for v in values:
-            if v is None:
-                continue
-            if isinstance(v, bool):
-                kinds.add("bool")
-            elif isinstance(v, int):
-                kinds.add("int")
-            elif isinstance(v, float):
-                kinds.add("float")
-            elif isinstance(v, list):
-                kinds.add("list")
-            elif isinstance(v, dict):
-                kinds.add("dict")
-            else:
-                kinds.add("str")
-        if kinds == {"bool"}:
-            return StructField(key, BooleanType())
-        if kinds == {"int"}:
-            return StructField(key, LongType())
-        if kinds <= {"int", "float"} and kinds:
-            return StructField(key, DoubleType())
-        if kinds == {"list"}:
-            return StructField(key, ArrayType(StringType()))
-        return StructField(key, StringType())
-
-    @classmethod
-    def _batch_schema(cls, recs: list) -> StructType:
-        cols = {}
-        for rec in recs:
-            for k in rec:
-                if k != "type":
-                    cols.setdefault(k, []).append(rec[k])
-        fields = [cls._infer_field(k, vs) for k, vs in cols.items()]
-        return StructType(fields)
-
-    @staticmethod
-    def _coerce(value, dtype):
-        if value is None:
-            return None
-        if isinstance(dtype, TimestampType):
-            return to_datetime(value).replace(tzinfo=None)
-        if isinstance(dtype, LongType):
-            return int(value)
-        if isinstance(dtype, DoubleType):
-            return float(value)
-        if isinstance(dtype, BooleanType):
-            return bool(value)
-        if isinstance(dtype, ArrayType):
-            if not isinstance(value, (list, tuple)):
-                value = [value]
-            return [
-                v if isinstance(v, str) else json.dumps(v, sort_keys=True)
-                for v in value
-            ]
-        if isinstance(value, (dict, list)):
-            return json.dumps(value, sort_keys=True)
-        return str(value)
-
-    def _records_to_df(self, recs: list) -> DataFrame:
-        schema = self._batch_schema(recs)
-        rows = [
-            tuple(self._coerce(rec.get(f.name), f.dataType) for f in schema.fields)
-            for rec in recs
-        ]
-        return self.spark.createDataFrame(rows, schema)
-
     # -- merge ---------------------------------------------------------------
-
-    def _write_type_batch(self, otype: str, recs: list, query_id: str | None):
-        new_df = self._records_to_df(recs)
-        if otype == CONTAINS:
-            self._merge_edges(otype, new_df, ["source_ref", "target_ref"])
-        elif otype == REFLIST:
-            self._merge_edges(otype, new_df, ["ref_name", "source_ref", "target_ref"])
-        elif "id" in new_df.columns:
-            new_df = self._merge_batch_dups(otype, new_df)
-            self._merge_upsert(otype, new_df)
-            if query_id:
-                tags = new_df.select(
-                    F.col("id").alias("sco_id"), F.lit(query_id).alias("query_id")
-                )
-                self._merge_edges(QUERIES, tags, ["sco_id", "query_id"])
-        else:
-            self._append(otype, new_df)
 
     def _merge_batch_dups(self, otype: str, df: DataFrame) -> DataFrame:
         """Collapse duplicate ids within one batch using upsert semantics

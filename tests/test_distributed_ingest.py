@@ -1,9 +1,16 @@
 """Distributed + streaming ingest must match the driver-side path exactly."""
 
 import json
+import os
+import uuid
 
 from firepit_spark.storage import SparkStorage
-from firepit_spark.sources.bundles import cache_distributed
+from firepit_spark.sources.bundles import (
+    cache_distributed,
+    flatten_objects,
+    ingest_flat,
+    read_bundle_objects,
+)
 from tests.conftest import distinct_urls, make_bundle
 
 
@@ -173,3 +180,189 @@ def test_streaming_ingest_backpressure(spark, tmp_path):
         q.stop()
     assert batches >= 3  # one file per micro-batch, not one giant batch
     assert st.count("observed-data") == 30  # ids overlap; upsert dedups
+
+
+def _mixed_kind_bundle() -> dict:
+    """2.0 observations of x-oca-asset SCOs whose custom props change kind
+    from one observation to the next, with nanosecond and fractional-second
+    observation timestamps."""
+    ident = "identity--b1e2c3d4-1111-4222-8333-944444444444"
+    rows = [  # x_mixed, x_num, first_observed
+        (True, 1, "2024-05-01T12:00:00.123456789Z"),
+        ("abc", 2.5, "2024-05-01T12:00:01.5Z"),
+        (7, 3, "2024-05-01T12:00:02Z"),
+        (1.25, None, "2024-05-01T12:00:03.25Z"),
+    ]
+    objects = [{"type": "identity", "id": ident, "name": "synth",
+                "identity_class": "program"}]
+    for i, (mixed, num, first) in enumerate(rows):
+        sco = {"type": "x-oca-asset", "hostname": f"host{i}",
+               "x_mixed": mixed, "x_flag": i % 2 == 0,
+               "x_dict": {"b": i, "a": "z"},
+               "x_ints": [i, i + 1], "x_bools": [True, False],
+               "x_dicts": [{"k": i}]}
+        if num is not None:
+            sco["x_num"] = num
+        objects.append({
+            "type": "observed-data",
+            "id": f"observed-data--{i:08d}-0000-4000-8000-000000000000",
+            "created_by_ref": ident, "first_observed": first,
+            "last_observed": first, "number_observed": 1,
+            "objects": {"0": sco},
+        })
+    return {"type": "bundle", "id": "bundle--mixed", "objects": objects}
+
+
+def _warehouse_state(st) -> dict:
+    """{table: (sorted (column, type) pairs, sorted rows)} for every table."""
+    out = {}
+    for t in sorted(os.listdir(st.tables_dir)):
+        df = st.table_df(t)
+        cols = sorted(df.columns)
+        rows = sorted(
+            repr(tuple(r[c] for c in cols)) for r in df.select(*cols).collect()
+        )
+        out[t] = (sorted(df.dtypes), rows)
+    return out
+
+
+def test_mixed_kinds_match_across_ingest_paths(spark, tmp_path):
+    """Both producers of ingest_flat store the same schema and the same
+    values: mixed-kind columns hold each value's JSON text (``true``),
+    dicts and non-string list elements become sort_keys JSON, nanosecond
+    timestamps truncate to micros, and a Python datetime handed to
+    ``load`` lands like its RFC-3339 text."""
+    from datetime import datetime, timezone
+
+    from firepit_spark.identifiers import makeid
+
+    bundle = _mixed_kind_bundle()
+    when = datetime(2024, 5, 1, 12, 0, 4, 250000, tzinfo=timezone.utc)
+    asset = {"type": "x-oca-asset", "spec_version": "2.1", "hostname": "hostdt",
+             "created": when}
+    asset_id = makeid(asset)
+
+    a = SparkStorage(str(tmp_path / "wh_driver"), spark=spark)
+    a.cache("q1", bundle)
+    a.load("assets", [dict(asset, id=asset_id)], query_id="q1")
+
+    on_disk = dict(bundle, objects=bundle["objects"] + [
+        dict(asset, id=asset_id, created="2024-05-01T12:00:04.25Z")])
+    path = tmp_path / "mixed.json"
+    path.write_text(json.dumps(on_disk))
+    b = SparkStorage(str(tmp_path / "wh_dist"), spark=spark)
+    cache_distributed(b, "q1", str(path))
+
+    state_a, state_b = _warehouse_state(a), _warehouse_state(b)
+    assert state_a == state_b
+
+    types = dict(state_a["x-oca-asset"][0])
+    assert types["x_mixed"] == "string" and types["x_num"] == "double"
+    assert types["x_flag"] == "boolean" and types["x_ints"] == "array<string>"
+    assert types["created"] == "timestamp"
+    rows = {r["hostname"]: r for r in a.table_df("x-oca-asset").collect()}
+    assert [rows[f"host{i}"]["x_mixed"] for i in range(4)] == [
+        "true", "abc", "7", "1.25"]
+    assert rows["host0"]["x_dict"] == '{"a": "z", "b": 0}'
+    assert rows["host1"]["x_ints"] == ["1", "2"]
+    assert rows["host1"]["x_bools"] == ["true", "false"]
+    assert rows["host1"]["x_dicts"] == ['{"k": 1}']
+    assert rows["hostdt"]["created"] == datetime(2024, 5, 1, 12, 0, 4, 250000)
+    firsts = sorted(r["first_observed"] for r in a.table_df("observed-data").collect())
+    assert firsts[0] == datetime(2024, 5, 1, 12, 0, 0, 123456)
+    assert firsts[1] == datetime(2024, 5, 1, 12, 0, 1, 500000)
+    # deterministic uuid5 ids, the same bytes on both paths
+    ids = sorted(rows)
+    assert all(
+        uuid.UUID(rows[h]["id"].split("--", 1)[1]).version == 5 for h in ids
+    )
+    assert rows["hostdt"]["id"] == asset_id
+
+
+def _tag_batches(st) -> int:
+    return len(st._batch_numbers(st._table_path("__queries")))
+
+
+def _tags(st, query_id) -> set:
+    return {
+        r["sco_id"]
+        for r in st.table_df("__queries").where(f"query_id = '{query_id}'").collect()
+    }
+
+
+def _record_ids(bundle) -> set:
+    """Ids of every non-edge record a bundle flattens to."""
+    from firepit_spark.flatten import flatten
+
+    return {
+        rec["id"]
+        for obj in bundle["objects"]
+        for rec in flatten(obj)
+        if rec["type"] not in ("__contains", "__reflist")
+    }
+
+
+def test_one_tag_batch_per_ingest_call(spark, tmp_path):
+    """Each tagged ingest call adds exactly one __queries batch holding the
+    ids of every SCO / observed-data row it ingested; overlapping GETs keep
+    each query's extract counts; untagged writes add no batch."""
+    st = SparkStorage(str(tmp_path / "wh_tags"), spark=spark)
+    first, second = make_bundle(20), make_bundle(30)  # ids overlap
+
+    st.cache("g1", first)
+    assert _tag_batches(st) == 1
+    assert _tags(st, "g1") == _record_ids(first)
+    st.extract("u1", "url", "g1", "")
+    n1 = st.count("u1")
+    assert n1 == distinct_urls(20)
+
+    st.cache("g2", second)
+    assert _tag_batches(st) == 2
+    assert _tags(st, "g2") == _record_ids(second)
+    assert st.count("u1") == n1
+    st.extract("u2", "url", "g2", "")
+    assert st.count("u2") == distinct_urls(30)
+
+    path = tmp_path / "b.json"
+    path.write_text(json.dumps(first))
+    cache_distributed(st, "g3", str(path))
+    assert _tag_batches(st) == 3
+    assert _tags(st, "g3") == _record_ids(first)
+
+    # untagged writes: no __queries batch, and no "None" tag
+    st.upsert_many(None, "url", [{"id": "url--untagged-1", "value": "http://untagged/1"}],
+                   query_id=None)
+    st.reassign("u1", [{"type": "url", "id": sorted(_tags(st, "g1"))[0],
+                        "x_note": "seen"}])
+    ingest_flat(st, flatten_objects(read_bundle_objects(spark, str(path))), None)
+    assert _tag_batches(st) == 3
+    assert _tags(st, "None") == set()
+
+
+def test_cache_jobs_carry_caller_job_group(spark, tmp_path):
+    """Every job a job-group-wrapped ``cache`` launches, the per-type jobs
+    of the ingest thread pool included, carries the caller's group."""
+    st = SparkStorage(str(tmp_path / "wh_group"), spark=spark)
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    j0 = int(jsc.dagScheduler().nextJobId())
+    sc.setJobGroup("fp-cache-group", "cache under a job group")
+    try:
+        st.cache("q1", make_bundle(10))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    j1 = int(jsc.dagScheduler().nextJobId())
+    assert j1 > j0
+    jsc.listenerBus().waitUntilEmpty(60_000)
+    jvm = sc._jvm
+    jobs = jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        jsc.statusStore().jobsList(jvm.java.util.ArrayList())
+    )
+    groups = {
+        int(j.jobId()): (j.jobGroup().get() if j.jobGroup().isDefined() else None)
+        for j in jobs
+        if j0 <= int(j.jobId()) < j1
+    }
+    assert len(groups) == j1 - j0
+    assert set(groups.values()) == {"fp-cache-group"}
