@@ -75,7 +75,7 @@ def run_set(spark, qs, sf_dir: str, runs: int, label: str) -> dict:
             df = qs[name](spark, sf_dir)
             n = df.count()
             samples.append(time.time() - t0)
-            # free operator-attached persists BETWEEN samples (r13-opt
+            # free library-persisted intermediates BETWEEN samples (r13-opt
             # measurement fix): without this, q25/q35's cached
             # intermediates piled up across samples and scale sections —
             # a later sample could silently REUSE an earlier sample's
@@ -86,13 +86,12 @@ def run_set(spark, qs, sf_dir: str, runs: int, label: str) -> dict:
             # outside the timed region, exactly like
             # scripts/check_correctness.py's per-query release.
             release(df)
-            # belt-and-braces (r13-opt continuation): release() only frees
-            # persists the operator attached to THIS result object; a slot
-            # that wraps an operator result in .select() drops the
-            # attribute (found live for q35/q38), leaving the cache in the
-            # CacheManager for the NEXT sample to silently reuse. Clearing
-            # the whole cache between samples guarantees every sample
-            # computes from the parquet inputs, whatever future slots do.
+            # release() frees every library cache the result's plan reads,
+            # so anything left is a leak: log it. Clearing the whole cache
+            # between samples still guarantees every sample computes from
+            # the parquet inputs, whatever future slots do.
+            if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+                print(f"# [{label}] {name}: caches left after release()")
             spark.catalog.clearCache()
         timings[name] = round(statistics.median(samples), 3)
         print(

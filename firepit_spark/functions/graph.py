@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from firepit_spark.functions import persist
+
 
 def edges_from(df: DataFrame, ref_col: str = "parent_ref") -> DataFrame:
     """(child, parent) edge list from a SCO table's ref column."""
@@ -33,16 +35,14 @@ def ancestors(
     # each level is persisted: the union output and the next level's join
     # both read it, and the empty-frontier probe would otherwise recompute
     # the whole join chain once per remaining level (O(depth^2) rework).
-    # The handles ride on the result; long-lived sessions call
-    # firepit_spark.functions.release(result) after the terminal action.
-    edges = edges_from(df, ref_col).persist()
-    caches = [edges]
-    level = edges.select(
+    # Long-lived sessions call firepit_spark.functions.release(result)
+    # after the terminal action.
+    edges = persist(edges_from(df, ref_col))
+    level = persist(edges.select(
         F.col("child").alias("descendant_id"),
         F.col("parent").alias("ancestor_id"),
         F.lit(1).alias("depth"),
-    ).persist()
-    caches.append(level)
+    ))
     out = level
     for d in range(2, max_depth + 1):
         nxt = (
@@ -62,15 +62,13 @@ def ancestors(
             # level unions zero rows: same result.
             out = out.unionByName(nxt)
             break
-        nxt = nxt.persist()
+        nxt = persist(nxt)
         if nxt.isEmpty():
             # dead frontier: nothing references it, free it immediately
             nxt.unpersist()
             break
-        caches.append(nxt)
         out = out.unionByName(nxt)
         level = nxt
-    out._fp_caches = caches
     return out
 
 
@@ -238,9 +236,7 @@ def connected_components(
         labels = new_labels.drop("__chg")
         if n_changed == 0:
             break
-    labels = labels.select("node", "comp")
-    labels._fp_caches = []
-    return labels
+    return labels.select("node", "comp")
 
 
 def dedup_clusters(
@@ -503,9 +499,7 @@ def process_tree(df: DataFrame, ref_col: str = "parent_ref", max_depth: int = 8)
     )
     # processes whose parent chain dead-ends outside the table keep their
     # deepest known ancestor as root
-    result = own_root.unionByName(to_root)
-    result._fp_caches = getattr(anc, "_fp_caches", [])
-    return result
+    return own_root.unionByName(to_root)
 
 
 def cluster_representatives(

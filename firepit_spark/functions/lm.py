@@ -40,7 +40,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from firepit_spark.functions import text as tx
+from firepit_spark.functions import persist, text as tx
 
 
 @dataclass
@@ -374,18 +374,15 @@ def kneser_ney_fit(
     and shuffle-joins corpus-scale ones; no driver-side model object
     ever materializes."""
     toks = _doc_tokens(df, id_col, text_col, tokens_col)
-    tri = (
+    tri = persist(
         _doc_trigrams(toks, id_col)
         .groupBy("w1", "w2", "w3")
         .agg(F.count(F.lit(1)).alias("c123"))
-        .persist()
     )
     hist = tri.groupBy("w1", "w2").agg(
         F.sum("c123").alias("h12"), F.count(F.lit(1)).alias("nf12")
     )
-    contbig = tri.groupBy("w2", "w3").agg(
-        F.count(F.lit(1)).alias("cb23")
-    ).persist()
+    contbig = persist(tri.groupBy("w2", "w3").agg(F.count(F.lit(1)).alias("cb23")))
     mid = contbig.groupBy("w2").agg(
         F.sum("cb23").alias("md2"), F.count(F.lit(1)).alias("nf2")
     )

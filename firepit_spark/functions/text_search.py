@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from firepit_spark.functions import persist
 from firepit_spark.functions.text import tokens
 
 
@@ -62,9 +63,7 @@ def build_text_index(
     # re-tokenizing the corpus (was 3 tokenize passes). persist() keeps
     # the shared subtree from re-executing across the derived frames —
     # the caller freezes both outputs to parquet anyway.
-    tf = (
-        toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")).persist()
-    )
+    tf = persist(toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")))
     # stopword cutoff: STRICTLY more than max_df_frac of docs -> dropped
     # (floor(frac*n) is the largest count that still satisfies <= frac;
     # floored at 1 so single-doc terms always survive tiny corpora)
@@ -84,9 +83,8 @@ def build_text_index(
     doc_lens = per_doc.crossJoin(
         F.broadcast(per_doc.select(F.avg("dl").alias("avgdl")))
     )
-    # cache-release contract (see functions.release): the tf cache backs
-    # both returned frames; release(postings) after freezing to parquet
-    postings._fp_caches = [tf]
+    # the tf cache backs both returned frames; release(postings) after
+    # freezing to parquet (see functions.release)
     return postings, doc_lens
 
 

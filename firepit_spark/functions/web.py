@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import persist
 from .pipeline import key_hash
 
 __all__ = [
@@ -447,15 +448,15 @@ def cap_per_key(
     count reads only the key column — column pruning makes it a fraction
     of a full scan) and reads the full rows once per join leg, in
     exchange for shrinking the plain window's full-data shuffle to just
-    the over-cap rows. MEASURED on local[32] (scripts/ab_capkey.py,
-    BASELINE.md round-8 lever log) the plain window is FASTER at
-    sf0.1/sf1 — WindowGroupLimit prunes its sort inputs and the local
-    exchange is an in-memory copy — so flip ``skew_safe=False`` for
-    small single-node jobs. The default stays True for the deployment
-    this op exists for: a real cluster, where the exchange is a network
-    shuffle of wide document rows and the under-cap Zipf bulk (which
-    WindowGroupLimit cannot prune — every one of its rows still
-    shuffles) instead passes through map-only.
+    the over-cap rows. MEASURED on local[32] (BASELINE.md, "cap_per_key
+    skew-safe vs plain window (round 8, third sitting)") the plain
+    window is FASTER at sf0.1/sf1 — WindowGroupLimit prunes its sort
+    inputs and the local exchange is an in-memory copy — so flip
+    ``skew_safe=False`` for small single-node jobs. The default stays
+    True for the deployment this op exists for: a real cluster, where
+    the exchange is a network shuffle of wide document rows and the
+    under-cap Zipf bulk (which WindowGroupLimit cannot prune — every one
+    of its rows still shuffles) instead passes through map-only.
 
     ``mode`` picks the formulation explicitly and supersedes
     ``skew_safe`` (kept for call-site compatibility; ``None`` derives
@@ -492,7 +493,7 @@ def cap_per_key(
         .select(F.col(key_col).alias("__hot_key"))
     )
     if mode == "auto":
-        hot = hot.persist()
+        hot = persist(hot)
         n_hot = hot.count()
         if n_hot == 0:
             hot.unpersist()
@@ -510,7 +511,7 @@ def cap_per_key(
         # across AQE replans — persist makes single computation a property
         # of the plan, not an optimizer courtesy (same release() contract
         # as 'auto', which already persisted for its decision count)
-        hot = hot.persist()
+        hot = persist(hot)
     # null-safe equality: a NULL key forms a group under the plain window,
     # so the hot-key path must route it the same way or the modes diverge
     cond = df[key_col].eqNullSafe(F.col("__hot_key"))
@@ -521,12 +522,9 @@ def cap_per_key(
         .filter(F.col("__rn") <= cap)
         .drop("__rn")
     )
-    out = cold_rows.unionByName(hot_rows)
-    # the hot frame is persisted in both remaining modes; expose it
-    # through the repo's release() convention so long-lived sessions can
-    # free it after the terminal action
-    out._fp_caches = [hot]
-    return out
+    # the hot frame is persisted in both remaining modes; long-lived
+    # sessions free it with release(result) after the terminal action
+    return cold_rows.unionByName(hot_rows)
 
 
 def cap_per_domain(

@@ -43,6 +43,7 @@ from firepit_spark.exceptions import (
     StixPatternError,
     UnknownViewname,
 )
+from firepit_spark.functions import persist
 from firepit_spark.identifiers import makeid
 from firepit_spark.patterns import compile_pattern, pattern_time_range
 from firepit_spark import props
@@ -125,7 +126,11 @@ class SparkStorage:
         # only from its SECOND consumer on (single-use frames stay lazy
         # plans — persisting them is a pure materialization loss), and
         # re-persists if an external clearCache() dropped it, so harness
-        # cache-clearing between samples stays correct.
+        # cache-clearing between samples stays correct. One lock guards
+        # build, tick and invalidation, so concurrent consumers never
+        # persist a frame the memo has already replaced (an orphan no
+        # invalidation would free).
+        self._obs_lock = threading.RLock()
         self._obs_edges_entry: list | None = None  # [DataFrame, n_uses]
         self._obs_frames: dict[str, list] = {}  # name -> [DataFrame, n_uses]
         self._obs_cache_sized: bool | None = None  # persist-gate memo
@@ -1104,13 +1109,14 @@ class SparkStorage:
         every table write (``edges=False`` keeps the __contains ⋈
         observed-data frame when neither of those tables changed), on view
         (re)definition/removal, and on delete/close."""
-        frames, self._obs_frames = self._obs_frames, {}
-        for f, _uses in frames.values():
-            f.unpersist()
-        if edges and self._obs_edges_entry is not None:
-            (ed, _uses), self._obs_edges_entry = self._obs_edges_entry, None
-            ed.unpersist()
-        self._obs_cache_sized = None  # table sizes may have changed
+        with self._obs_lock:
+            frames, self._obs_frames = self._obs_frames, {}
+            for f, _uses in frames.values():
+                f.unpersist()
+            if edges and self._obs_edges_entry is not None:
+                (ed, _uses), self._obs_edges_entry = self._obs_edges_entry, None
+                ed.unpersist()
+            self._obs_cache_sized = None  # table sizes may have changed
 
     def _obs_tables_bytes(self) -> int:
         """On-disk bytes of the two tables behind the observation join —
@@ -1166,7 +1172,7 @@ class SparkStorage:
             and entry[0].storageLevel == StorageLevel.NONE
             and self._obs_cache_worthwhile()
         ):
-            entry[0].persist()
+            persist(entry[0])
         return entry[0]
 
     def _obs_edges(self) -> DataFrame:
@@ -1176,21 +1182,22 @@ class SparkStorage:
         guide §1.2/§2.4). Columns: ``__fp_target`` (the contained SCO id)
         plus every observed-data column under its own name. Persisted
         once a second consumer appears."""
-        entry = self._obs_edges_entry
-        if entry is None:
-            contains = self.table_df(CONTAINS)
-            obs = self.table_df("observed-data")
-            df = (
-                contains.alias("c")
-                .join(obs.alias("o"), F.col("c.source_ref") == F.col("o.id"),
-                      "inner")
-                .select(
-                    F.col("c.target_ref").alias("__fp_target"),
-                    *[F.col(f"o.`{x}`").alias(x) for x in obs.columns],
+        with self._obs_lock:
+            entry = self._obs_edges_entry
+            if entry is None:
+                contains = self.table_df(CONTAINS)
+                obs = self.table_df("observed-data")
+                df = (
+                    contains.alias("c")
+                    .join(obs.alias("o"),
+                          F.col("c.source_ref") == F.col("o.id"), "inner")
+                    .select(
+                        F.col("c.target_ref").alias("__fp_target"),
+                        *[F.col(f"o.`{x}`").alias(x) for x in obs.columns],
+                    )
                 )
-            )
-            entry = self._obs_edges_entry = [df, 0]
-        return self._tick_entry(entry)
+                entry = self._obs_edges_entry = [df, 0]
+            return self._tick_entry(entry)
 
     def _obs_join(self, df: DataFrame) -> DataFrame:
         """view ⋈ __contains ⋈ observed-data (the J6 triple join used by
@@ -1212,22 +1219,23 @@ class SparkStorage:
         ``__fp_obs_<name>``. ``None`` when the view has no ``id`` column
         (nothing to join on — callers fall back to the uncached path and
         fail exactly where the old code did)."""
-        entry = self._obs_frames.get(viewname)
-        if entry is None:
-            v = self._resolve(viewname)
-            if "id" not in v.columns:
-                return None
-            joined = self._obs_join(v)
-            obs_cols = self.table_df("observed-data").columns
-            df = joined.select(
-                *[F.col(f"v.`{x}`").alias(x) for x in v.columns],
-                *[
-                    F.col(f"obs.`{x}`").alias(self._OBS_PREFIX + x)
-                    for x in obs_cols
-                ],
-            )
-            entry = self._obs_frames[viewname] = [df, 0]
-        return self._tick_entry(entry)
+        with self._obs_lock:
+            entry = self._obs_frames.get(viewname)
+            if entry is None:
+                v = self._resolve(viewname)
+                if "id" not in v.columns:
+                    return None
+                joined = self._obs_join(v)
+                obs_cols = self.table_df("observed-data").columns
+                df = joined.select(
+                    *[F.col(f"v.`{x}`").alias(x) for x in v.columns],
+                    *[
+                        F.col(f"obs.`{x}`").alias(self._OBS_PREFIX + x)
+                        for x in obs_cols
+                    ],
+                )
+                entry = self._obs_frames[viewname] = [df, 0]
+            return self._tick_entry(entry)
 
     def _obs_path_frame(self, viewname: str, path: str):
         """(frame, value_col, prop, obs_col_fn) for the observation-count
@@ -1252,16 +1260,6 @@ class SparkStorage:
             prop,
             lambda name: F.col(f"obs.`{name}`"),
         )
-
-    def obs_cache_handles(self) -> list:
-        """The live memoized observation frames, for callers that manage
-        cache lifetime explicitly (e.g. ``release(result)`` protocols):
-        unpersisting them is always safe — the memo re-persists on next
-        use."""
-        out = [df for df, _uses in self._obs_frames.values()]
-        if self._obs_edges_entry is not None:
-            out.append(self._obs_edges_entry[0])
-        return out
 
     def extract_observeddata_attribute(
         self,

@@ -11,6 +11,7 @@ Usage: python scripts/check_correctness.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -55,6 +56,41 @@ def canon_rows(cols, rows):
     return sorted(out)
 
 
+def oracle_db(sf_dir):
+    """DuckDB connection with one view per table under ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        # driver testdata is a single file; Spark-written tables (e.g. the
+        # make_scale_data.py sf1 point) are directories of part files
+        path = f"{sf_dir}/{t}.parquet"
+        pattern = f"{path}/*.parquet" if os.path.isdir(path) else path
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{pattern}'")
+    return con
+
+
+def compare(scols, srows, ocols, orows) -> list:
+    """What differs between a Spark result and its oracle: row count,
+    sorted column names, then order-insensitive canonical values. Empty
+    when they agree."""
+    problems = []
+    if len(srows) != len(orows):
+        problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"columns spark={sorted(scols)} oracle={sorted(ocols)}")
+    if not problems:
+        a = canon_rows(scols, [tuple(r) for r in srows])
+        b = canon_rows(ocols, orows)
+        if a != b:
+            ndiff = sum(1 for x, y in zip(a, b) if x != y)
+            problems.append(f"values differ ({ndiff} of {len(a)} rows)")
+            for x, y in list(zip(a, b))[:2000]:
+                if x != y:
+                    problems.append(f"  spark : {x}")
+                    problems.append(f"  oracle: {y}")
+                    break
+    return problems
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -65,8 +101,6 @@ def main():
     # supplies its own SparkSession, so queries() must be self-contained.
     # Round-1 lesson: build_spark here masked a nanosAsLong dependency that
     # failed 7 queries under the driver (CORRECTNESS_r01.json).
-    import os
-
     from pyspark.sql import SparkSession
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
@@ -78,14 +112,7 @@ def main():
         .config("spark.driver.memory", "8g")
         .getOrCreate()
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        # driver testdata is a single file; Spark-written tables (e.g. the
-        # make_scale_data.py sf1 point) are directories of part files
-        path = f"{sf_dir}/{t}.parquet"
-        pattern = f"{path}/*.parquet" if os.path.isdir(path) else path
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{pattern}'")
-
+    con = oracle_db(sf_dir)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
@@ -97,9 +124,9 @@ def main():
             sdf = fn(spark, sf_dir)
             scols = [c.lower() for c in sdf.columns]
             srows = sdf.collect()
-            release(sdf)  # free operator-attached persists (q21/q25/q35)
-            # guarantee the next slot computes from parquet even if a slot
-            # drops its _fp_caches attribute in a projection (r13-opt)
+            release(sdf)  # free the library caches the result reads
+            # guarantee the next slot computes from parquet even if a
+            # cache escaped release()
             spark.catalog.clearCache()
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
@@ -116,22 +143,7 @@ def main():
             print(f"FAIL {name}: duckdb error: {e}")
             failures.append(name)
             continue
-        problems = []
-        if len(srows) != len(orows):
-            problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"columns spark={sorted(scols)} oracle={sorted(ocols)}")
-        if not problems:
-            a = canon_rows(scols, [tuple(r) for r in srows])
-            b = canon_rows(ocols, orows)
-            if a != b:
-                ndiff = sum(1 for x, y in zip(a, b) if x != y)
-                problems.append(f"values differ ({ndiff} of {len(a)} rows)")
-                for x, y in list(zip(a, b))[:2000]:
-                    if x != y:
-                        problems.append(f"  spark : {x}")
-                        problems.append(f"  oracle: {y}")
-                        break
+        problems = compare(scols, srows, ocols, orows)
         if problems:
             print(f"FAIL {name}: " + "; ".join(problems[:4]))
             failures.append(name)

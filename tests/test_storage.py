@@ -653,3 +653,97 @@ def test_observation_stats_fused_matches_separate_ops(spark, tmp_path):
     sep = {(r["value"], r["count"], r["number_observed"])
            for r in counts.join(nobs, "value").collect()}
     assert fused == sep and len(fused) == 2
+
+
+def _cache_manager(spark):
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
+def test_obs_memo_concurrent_consumers_leave_no_orphan(store, monkeypatch):
+    """Eight threads of value_counts on one view build, tick and persist
+    the observation memo under one lock: each memo key persists at most
+    one frame, it is the live memo entry, and invalidation leaves the
+    CacheManager empty."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import firepit_spark.storage as storage_mod
+
+    monkeypatch.setenv("FIREPIT_OBS_CACHE_MIN_BYTES", "0")
+    persisted = []
+    real_persist = storage_mod.persist
+
+    def recording_persist(df, level=None):
+        persisted.append(df)
+        return real_persist(df, level)
+
+    monkeypatch.setattr(storage_mod, "persist", recording_persist)
+    cm = _cache_manager(store.spark)
+    store.spark.catalog.clearCache()
+    store.extract("accts", "user-account", "q1", "")
+    path = "user-account:account_login"
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            results = list(pool.map(
+                lambda _: sorted(
+                    (r[path], r["count"])
+                    for r in store.value_counts("accts", path)
+                ),
+                range(8),
+                timeout=600,
+            ))
+    finally:
+        sys.setswitchinterval(interval)
+    try:
+        assert all(r == results[0] for r in results)
+        assert len(results[0]) == 14
+        live = {id(e[0]) for e in store._obs_frames.values()}
+        if store._obs_edges_entry is not None:
+            live.add(id(store._obs_edges_entry[0]))
+        assert {id(df) for df in persisted} <= live
+        assert 1 <= cm.cachedData().size() <= len(live)
+        store._invalidate_obs_caches()
+        assert cm.isEmpty()
+    finally:
+        store.spark.catalog.clearCache()
+
+
+def test_obs_memo_persisted_path_released_from_plan(store, monkeypatch):
+    """The persisted memo path (size gate at 0): a q56-shaped result —
+    value_counts ⋈ number_observed × summary over one view — persists
+    the memo from its second consumer; release(result) finds and frees
+    it from the result's plan alone; a third consumer persists it again
+    and returns identical rows."""
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+
+    from firepit_spark.functions import release
+
+    monkeypatch.setenv("FIREPIT_OBS_CACHE_MIN_BYTES", "0")
+    cm = _cache_manager(store.spark)
+    store.spark.catalog.clearCache()
+    store.extract("urls", "url", "q1", "")
+    counts = store.value_counts_df("urls", "url:value")
+    memo = store._obs_frames["urls"][0]
+    assert memo.storageLevel == StorageLevel.NONE  # one consumer: lazy
+    nobs = store.number_observed_df("urls", "url:value")
+    assert memo.storageLevel != StorageLevel.NONE  # second: persisted
+    summ = store.summary_df("urls")
+    out = counts.join(nobs, "value").crossJoin(F.broadcast(summ))
+    want = sorted(map(tuple, out.collect()))
+    assert len(want) == distinct_urls()
+    want_counts = sorted(map(tuple, counts.collect()))
+    assert not cm.isEmpty()
+    release(out)
+    try:
+        assert cm.isEmpty()
+        again = store.value_counts_df("urls", "url:value")
+        assert store._obs_frames["urls"][0] is memo
+        assert memo.storageLevel != StorageLevel.NONE
+        assert sorted(map(tuple, again.collect())) == want_counts
+        release(again)
+        assert cm.isEmpty()
+    finally:
+        store.spark.catalog.clearCache()

@@ -296,33 +296,36 @@ def test_cap_per_key_auto_mode_three_regimes(spark, skewed):
     with pytest.raises(ValueError):
         wb.cap_per_key(skewed, "domain", 10, "doc_id", mode="eager")
 
-    # the decision count's persisted hot frame is exposed for release()
+    # the decision count's persisted hot frame is freed by release()
     from firepit_spark.functions import release
 
+    cm = skewed.sparkSession._jsparkSession.sharedState().cacheManager()
+    skewed.sparkSession.catalog.clearCache()
     again2 = wb.cap_per_domain(skewed, 10, salt="s", mode="auto")
-    assert len(getattr(again2, "_fp_caches", [])) == 1
     again2.count()
-    release(again2)  # no-op-safe unpersist of the hot-key cache
+    assert cm.cachedData().size() == 1
+    release(again2)
+    assert cm.isEmpty()
 
 
 def test_cap_per_key_skew_mode_persists_hot_set_once(skewed):
     """mode='skew' (VERDICT r9 #7): the hot aggregate feeds BOTH join
     legs; persisting it makes single computation a plan property instead
-    of relying on Catalyst exchange reuse. The cache is exposed via the
-    release() contract like auto mode's."""
+    of relying on Catalyst exchange reuse. release() frees the cache like
+    auto mode's."""
     from firepit_spark.functions import release
 
+    cm = skewed.sparkSession._jsparkSession.sharedState().cacheManager()
+    skewed.sparkSession.catalog.clearCache()
     capped = wb.cap_per_domain(skewed, 10, salt="s", mode="skew")
-    caches = getattr(capped, "_fp_caches", [])
-    assert len(caches) == 1
     capped.count()  # materialize: the hot frame lands in the cache
-    assert caches[0].storageLevel.useMemory
+    assert cm.cachedData().size() == 1
     # both legs now read InMemoryTableScan of the SAME cached aggregate —
     # the executed plan carries no second aggregation of the hot set
     plan = capped._jdf.queryExecution().executedPlan().toString()
     assert plan.count("InMemoryTableScan") >= 2
     release(capped)
-    assert not caches[0].storageLevel.useMemory
+    assert cm.isEmpty()
 
 
 # ------------------------------------------- PSL-table registered domain
